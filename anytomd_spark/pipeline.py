@@ -3,9 +3,11 @@
 Lifecycle (SURVEY.md §3.4):
 
     read transcripts -> anti-join completed lineage buckets (resume)
-      -> salted repartition by hash(conv_id) -> mapInPandas(convert_batch)
-      -> window-ordered output -> idempotent per-bucket overwrite
-      -> lineage rows (bytes in, chars out, fmt histogram, failures)
+      -> mapInPandas(convert_batch) (optional salted repartition first)
+      -> window-ordered output, exchanged on the output bucket
+      -> idempotent per-bucket overwrite (one file per bucket)
+      -> lineage rows in one scan (bytes in, chars out, fmt histogram,
+         failures)
 
 Scale notes (designed for 10^12 turns / 1000 executors; validated on
 local[32]):
@@ -27,6 +29,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -149,9 +152,10 @@ def convert_transcripts(
     (e.g. an Iceberg table partitioned by conversation): then the salted
     key ``(hash(conv_id), pmod(turn_idx, salt))`` splits mega-conversations
     so no task inherits a whole one — payload-byte skew that AQE's
-    row-count heuristics can miss. The hash(conv_id) partitioning the
-    north rule requires for output ordering happens in ``ordered_output``'s
-    window shuffle regardless.
+    row-count heuristics can miss. The shuffle the north rule requires
+    for output ordering happens in ``ordered_output`` regardless; in
+    ``run_pipeline`` it is keyed on the output bucket (a pure function
+    of conv_id), so each bucket is ordered and written by one task.
     """
     out = _salted_repartition(df, partitions, salt_buckets) if repartition else df
     # passthrough columns survive the kernel: output schema = input + outputs
@@ -303,7 +307,7 @@ def ordered_output(
     only — never re-running the conversion kernel and never shuffling
     payloads twice), cross-bucket offsets come from a per-conv window
     over *bucket rows* (a 10^8-turn conv is ~100 rows there), and the
-    payload-side window partitions on (conv_id, bucket) — bounded at
+    payload-side window partitions on (conv_id, turn bucket) — bounded at
     ``seq_bucket`` rows per task regardless of conversation size.
 
     ``turns`` must contain exactly the (conv_id, turn_idx) rows of
@@ -322,13 +326,32 @@ def ordered_output(
     driver-side scalar job on (conv_id, turn_idx) only — payloads never
     move. Pass ``adaptive=False`` to pin the two-level plan (tests,
     known-skewed inputs).
+
+    Bucket-aligned exchange: when ``converted`` carries the output
+    ``bucket`` column (:func:`bucketed`, a pure function of conv_id), the
+    payload exchange is keyed on it and it leads every window and sort
+    key — ``repartition(bucket)`` on the legacy path,
+    ``repartition(bucket, _seq_bkt)`` on the two-level path, which keeps
+    a mega-conversation spread across tasks. Outside the two-level path
+    every bucket then sits in exactly one task, so a ``partitionBy(
+    "bucket")`` write commits one file per bucket and needs no sort of
+    its own. The price: the post-shuffle stage has at most one task per
+    written bucket, so size ``n_buckets`` to the cluster. A frame without
+    ``bucket`` gets the conv_id-hashed plan. ``turn_seq`` is identical
+    either way.
     """
-    if turns is None:
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    lead = ["bucket"] if "bucket" in converted.columns else []
+
+    def single_window() -> DataFrame:
+        staged = converted.repartition(*lead) if lead else converted
+        w = Window.partitionBy(*lead, "conv_id").orderBy("turn_idx")
         return (
-            converted.withColumn("turn_seq", F.row_number().over(w))
-            .sortWithinPartitions("conv_id", "turn_idx")
+            staged.withColumn("turn_seq", F.row_number().over(w))
+            .sortWithinPartitions(*lead, "conv_id", "turn_idx")
         )
+
+    if turns is None:
+        return single_window()
     bkt = F.floor(
         F.coalesce(F.col("turn_idx"), F.lit(0)) / F.lit(seq_bucket)
     ).cast("long")
@@ -345,17 +368,12 @@ def ordered_output(
             .collect()[0][0]
         )
         if biggest is None or biggest < seq_bucket:
-            w = Window.partitionBy("conv_id").orderBy("turn_idx")
-            return (
-                converted.withColumn("turn_seq", F.row_number().over(w))
-                .sortWithinPartitions("conv_id", "turn_idx")
-            )
+            return single_window()
     w_off = Window.partitionBy("conv_id").orderBy("_seq_bkt")
     offsets = counts.select(
         "conv_id", "_seq_bkt",
         (F.sum("_n").over(w_off) - F.col("_n")).cast("long").alias("_off"),
     )
-    w_seq = Window.partitionBy("conv_id", "_seq_bkt").orderBy("turn_idx")
     # null-safe on conv_id: a plain inner equi-join would silently DROP
     # rows with a null conv_id (null never equals null) even though the
     # same rows exist on the counts side; the legacy window kept them
@@ -363,19 +381,23 @@ def ordered_output(
         F.col("conv_id").alias("_oc"), F.col("_seq_bkt").alias("_ob"),
         "_off",
     )
+    ranked = converted.withColumn("_seq_bkt", bkt).join(
+        off,
+        F.col("conv_id").eqNullSafe(F.col("_oc"))
+        & (F.col("_seq_bkt") == F.col("_ob")),
+    )
+    if lead:
+        # after the join: its own exchange (if any) is keyed on the
+        # null-safe join keys, which the window could not reuse anyway
+        ranked = ranked.repartition(*lead, "_seq_bkt")
+    w_seq = Window.partitionBy(*lead, "conv_id", "_seq_bkt").orderBy("turn_idx")
     return (
-        converted.withColumn("_seq_bkt", bkt)
-        .join(
-            off,
-            F.col("conv_id").eqNullSafe(F.col("_oc"))
-            & (F.col("_seq_bkt") == F.col("_ob")),
-        )
-        .withColumn(
+        ranked.withColumn(
             "turn_seq",
             (F.col("_off") + F.row_number().over(w_seq)).cast("int"),
         )
         .drop("_seq_bkt", "_off", "_oc", "_ob")
-        .sortWithinPartitions("conv_id", "turn_idx")
+        .sortWithinPartitions(*lead, "conv_id", "turn_idx")
     )
 
 
@@ -398,24 +420,27 @@ def bucketed(df: DataFrame, n_buckets: int = 64) -> DataFrame:
 
 def compute_lineage(converted_with_bucket: DataFrame, run_id: str) -> DataFrame:
     """Per-bucket extraction metrics incl. a format histogram map
-    (SURVEY.md §2.5). Two partial-aggregable passes; no collect."""
-    base = converted_with_bucket.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_rows"),
+    (SURVEY.md §2.5). One scan: every metric is summed per (bucket, fmt),
+    then those few rows per bucket roll up into the bucket's totals and
+    its ``fmt_hist``; no join, no collect."""
+    per_fmt = converted_with_bucket.groupBy("bucket", "fmt").agg(
+        F.count(F.lit(1)).alias("n"),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("chars_out").alias("chars_out"),
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_failures"),
-        F.sum("n_warnings").cast("long").alias("n_warnings"),
-    )
-    hist = (
-        converted_with_bucket.groupBy("bucket", "fmt")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("bucket")
-        .agg(F.map_from_entries(
-            F.collect_list(F.struct(F.coalesce("fmt", F.lit("unknown")), "n"))
-        ).alias("fmt_hist"))
+        F.sum("n_warnings").alias("n_warnings"),
     )
     return (
-        base.join(hist, "bucket", "left")
+        per_fmt.groupBy("bucket").agg(
+            F.sum("n").alias("n_rows"),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.sum("chars_out").alias("chars_out"),
+            F.sum("n_failures").alias("n_failures"),
+            F.sum("n_warnings").cast("long").alias("n_warnings"),
+            F.map_from_entries(
+                F.collect_list(F.struct(F.coalesce("fmt", F.lit("unknown")), "n"))
+            ).alias("fmt_hist"),
+        )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("status", F.lit("done"))
         .withColumn("ts", F.lit(time.time()))
@@ -461,6 +486,31 @@ def compute_fmt_histogram(converted: DataFrame) -> DataFrame:
     return converted.groupBy("fmt").agg(F.count(F.lit(1)).alias("n"))
 
 
+def _done_buckets(spark: SparkSession, lineage_path: str, storage: str) -> set[int]:
+    """Buckets earlier runs recorded as done. Only a lineage that does
+    not exist yet (no table; no path, or a path holding no data files,
+    as a crashed first append leaves it) means a first run. Any other
+    read failure raises: a corrupt or unreadable lineage must not
+    silently re-convert every bucket."""
+    from anytomd_spark import table_io
+
+    if storage == "iceberg" and not spark.catalog.tableExists(lineage_path):
+        return set()
+    try:
+        lineage = table_io.read_lineage(spark, lineage_path, storage)
+    except AnalysisException as e:
+        if storage == "parquet" and e.getCondition() in (
+            "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA",
+        ):
+            return set()
+        raise
+    return {
+        r.bucket
+        for r in lineage.filter(F.col("status") == "done")
+        .select("bucket").distinct().collect()
+    }
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -488,12 +538,17 @@ def run_pipeline(
     I/O budget (the 100 TB design constraint): ONE read of the input
     (the conversion+write job — run/failure counts ride on it as an
     ``observe`` metric, costing nothing), and one METRIC-COLUMNS-ONLY
-    read of the just-written output for the per-bucket lineage — the
+    scan of the just-written output for the per-bucket lineage — the
     explicit slim projection guarantees the parquet scan materializes
     only the ~6 narrow metric columns, never the markdown/text payloads
     that dominate the bytes (at 100 TB output this is ~1-2% extra read,
     and it buys the durability property: lineage describes the rows
-    actually committed, not the rows we believe we wrote).
+    actually committed, not the rows we believe we wrote). The ordering
+    exchange is keyed on the output bucket, so the write commits one
+    file per bucket (outside the two-level mega-conversation path) and
+    the lineage scan opens each written bucket's file once. With
+    ``resume``, only a lineage that does not exist yet is a first run;
+    an unreadable one raises (see :func:`_done_buckets`).
     """
     from pyspark.sql import Observation
 
@@ -503,17 +558,9 @@ def run_pipeline(
     run_id = run_id or uuid.uuid4().hex[:12]
     df = bucketed(transcripts, n_buckets)
 
-    done_buckets: set[int] = set()
-    if resume:
-        try:
-            lineage = table_io.read_lineage(spark, lineage_path, storage)
-            done_buckets = {
-                r.bucket
-                for r in lineage.filter(F.col("status") == "done")
-                .select("bucket").distinct().collect()
-            }
-        except Exception:
-            pass  # first run: no lineage yet
+    done_buckets = (
+        _done_buckets(spark, lineage_path, storage) if resume else set()
+    )
 
     # bucket arithmetic is driver-side (bounded by n_buckets) — no
     # key-scan of the input just to enumerate what remains
@@ -529,11 +576,12 @@ def run_pipeline(
         strict=strict, max_input_bytes=max_input_bytes,
     )
     # bucket is a pure function of conv_id — recompute it post-kernel
-    # (mapInPandas declares a fixed output schema without it). The slim
-    # pre-kernel projection feeds the skew-safe turn_seq counts.
-    ordered = bucketed(
-        ordered_output(converted, turns=df.select("conv_id", "turn_idx")),
-        n_buckets,
+    # (mapInPandas declares a fixed output schema without it) so the
+    # ordering exchange keys on it: one task, one file per bucket. The
+    # slim pre-kernel projection feeds the skew-safe turn_seq counts.
+    ordered = ordered_output(
+        bucketed(converted, n_buckets),
+        turns=df.select("conv_id", "turn_idx"),
     )
 
     # run totals + the set of buckets actually written ride on the write

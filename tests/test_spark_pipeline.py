@@ -23,7 +23,9 @@ from anytomd_spark.pipeline import (  # noqa: E402
     ordered_output,
     run_pipeline,
 )
+from anytomd_spark.binfixtures import BIN_FIXTURES  # noqa: E402
 from anytomd_spark.transcripts import (  # noqa: E402
+    TRANSCRIPTS_SCHEMA,
     fixture_transcripts,
     generate_transcripts,
 )
@@ -34,6 +36,27 @@ def spark():
     s = build_session(master="local[2]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+def inrepo_transcripts(spark):
+    """Pipeline-mechanics input that ships with the repo: one conversation
+    of the binfixtures payloads (DOCX, PPTX, XLSX, XLS, ipynb) plus a few
+    generated conversations of the text formats."""
+    import pandas as pd
+
+    generated = generate_transcripts(
+        spark, n_convs=6, seed=5, mega_every=0, partitions=1
+    ).toPandas()
+    ts = generated.ts.iloc[0]
+    binary = pd.DataFrame(
+        [
+            ("conv-binfixtures", i, "user", payload,
+             "ipynb" if fmt == "ipynb" else "", ts)
+            for i, (fmt, (payload, _md, _n)) in enumerate(BIN_FIXTURES.items())
+        ],
+        columns=generated.columns,
+    )
+    return pd.concat([binary, generated], ignore_index=True)
 
 
 GOLDEN_NAMES = [
@@ -62,16 +85,17 @@ def test_fixture_conversation_golden_equality(spark):
 
 
 def test_fmt_histogram(spark):
-    df = spark.createDataFrame(fixture_transcripts())
+    from anytomd_spark.batch import convert_batch
+
+    pdf = inrepo_transcripts(spark)
+    df = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
     hist = {
         r.fmt: r.n
         for r in compute_fmt_histogram(convert_transcripts(df)).collect()
     }
-    assert hist["html"] == 1
-    assert hist["docx"] == 1
-    assert hist["xls"] == 2
-    assert hist["code"] == 1
-    assert hist["txt"] == 1
+    assert sum(hist.values()) == len(pdf)
+    assert hist == convert_batch(pdf)["fmt"].value_counts().to_dict()
+    assert set(BIN_FIXTURES) <= set(hist)
 
 
 def test_generated_transcripts_deterministic(spark):
@@ -254,13 +278,78 @@ def test_lineage_read_is_metric_columns_only(spark, tmp_path):
 
 
 def test_compute_lineage_histogram(spark):
-    df = spark.createDataFrame(fixture_transcripts())
+    pdf = inrepo_transcripts(spark)
+    df = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
     converted = bucketed(convert_transcripts(df), n_buckets=4)
     lin = compute_lineage(converted, "t").collect()
     total = sum(r.n_rows for r in lin)
-    assert total == len(GOLDEN_NAMES)
+    assert total == len(pdf)
     hist_total = sum(sum(r.fmt_hist.values()) for r in lin if r.fmt_hist)
-    assert hist_total == len(GOLDEN_NAMES)
+    assert hist_total == len(pdf)
+
+
+def _two_scan_lineage(converted_with_bucket, run_id):
+    """Reference for compute_lineage: the earlier formula, one scan for
+    the metric sums and one for the format histogram, joined on bucket."""
+    import time
+
+    base = converted_with_bucket.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("chars_out").alias("chars_out"),
+        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_failures"),
+        F.sum("n_warnings").cast("long").alias("n_warnings"),
+    )
+    hist = (
+        converted_with_bucket.groupBy("bucket", "fmt")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("bucket")
+        .agg(F.map_from_entries(
+            F.collect_list(F.struct(F.coalesce("fmt", F.lit("unknown")), "n"))
+        ).alias("fmt_hist"))
+    )
+    return (
+        base.join(hist, "bucket", "left")
+        .withColumn("run_id", F.lit(run_id))
+        .withColumn("status", F.lit("done"))
+        .withColumn("ts", F.lit(time.time()))
+    )
+
+
+def test_compute_lineage_single_scan_matches_two_scan(spark):
+    """The one-scan lineage equals the two-scan-plus-join formula in
+    values, column names and types (fmt_hist map<string,long> included),
+    over several buckets, a null fmt, error rows and warnings."""
+    rows = [
+        (0, "html", 100, 40, None, 0),
+        (0, "html", 50, 20, None, 2),
+        (0, None, 7, 0, "undetected", 0),
+        (0, "pdf", 30, 0, "unsupported", 1),
+        (1, "docx", 900, 300, None, 3),
+        (1, "csv", 10, 12, None, 0),
+        (1, "csv", 11, None, None, None),
+        (2, None, 5, 0, "undetected", 0),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "bucket int, fmt string, bytes_in long, chars_out long, "
+        "error string, n_warnings int",
+    )
+    got = compute_lineage(df, "r").drop("ts")
+    want = _two_scan_lineage(df, "r").drop("ts")
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in want.schema.fields
+    ]
+    assert dict(got.dtypes)["fmt_hist"] == "map<string,bigint>"
+
+    def by_bucket(frame):
+        return sorted((r.asDict() for r in frame.collect()),
+                      key=lambda r: r["bucket"])
+
+    got_rows = by_bucket(got)
+    assert got_rows == by_bucket(want)
+    assert got_rows[0]["fmt_hist"] == {"html": 2, "unknown": 1, "pdf": 1}
+    assert got_rows[0]["n_failures"] == 2 and got_rows[1]["n_warnings"] == 3
 
 
 def test_verify_against_expected(spark):
@@ -304,32 +393,98 @@ def test_ordered_output_mega_conversation_two_level(spark):
     """A single 1M-turn conversation through the skew-safe turn_seq path:
     exact rank values, and the payload-side window partitions on
     (conv_id, _seq_bkt) — a whole conversation never lands on one task
-    (VERDICT r2 'What's wrong #2')."""
+    (VERDICT r2 'What's wrong #2'). With an output ``bucket`` column the
+    payload exchange is keyed on (bucket, _seq_bkt), so the bound holds
+    there too."""
     import contextlib
     import io
 
     n = 1_000_000
     turns = spark.range(n).select(
-        F.lit("megaconv").alias("conv_id"),
+        # computed, not a literal: the optimizer folds a constant conv_id
+        # (and the bucket derived from it) out of every partitioning
+        F.concat(F.lit("megaconv"), F.substring(F.col("id").cast("string"), 1, 0))
+        .alias("conv_id"),
         F.col("id").cast("int").alias("turn_idx"),
     )
     # shuffled arrival order: ordering must come from the operator
     converted = turns.withColumn("payload", F.lit("x")).orderBy(
         F.xxhash64("turn_idx")
     )
-    out = ordered_output(converted, turns=turns, seq_bucket=65536)
-    assert out.filter(F.col("turn_seq") != F.col("turn_idx") + 1).count() == 0
+    for frame in (converted, bucketed(converted, n_buckets=8)):
+        out = ordered_output(frame, turns=turns, seq_bucket=65536)
+        assert out.filter(F.col("turn_seq") != F.col("turn_idx") + 1).count() == 0
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain(True)
-    plan = buf.getvalue()
-    # the two-level path is active: bucket key present in the plan, and
-    # every row_number window spec includes it next to conv_id
-    assert "_seq_bkt" in plan
-    for line in plan.splitlines():
-        if "row_number()" in line and "windowspecdefinition" in line:
-            assert "_seq_bkt" in line, line
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            out.explain(True)
+        plan = buf.getvalue()
+        # the two-level path is active: bucket key present in the plan, and
+        # every row_number window spec includes it next to conv_id
+        assert "_seq_bkt" in plan
+        for line in plan.splitlines():
+            if "row_number()" in line and "windowspecdefinition" in line:
+                assert "_seq_bkt" in line, line
+        if "bucket" in frame.columns:
+            by_bucket = [line for line in plan.splitlines()
+                         if "Exchange hashpartitioning(bucket#" in line]
+            assert by_bucket
+            for line in by_bucket:
+                assert "_seq_bkt" in line, line
+
+
+@pytest.mark.parametrize("path", ["legacy", "adaptive", "two_level"])
+def test_ordered_output_bucket_column_keeps_turn_seq(spark, path):
+    """Keying the exchange on the output bucket changes placement, not
+    ranks: (conv_id, turn_idx, turn_seq) are identical with and without
+    a ``bucket`` column, on the single-window and the two-level path,
+    null conv_id included."""
+    rows = [(f"c{c}", t * 3 + c) for c in range(12) for t in range(c % 5 + 1)]
+    rows += [(None, 4), (None, 0), (None, 9)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int") \
+        .withColumn("payload", F.lit("p"))
+    kwargs = {
+        "legacy": {},
+        "adaptive": {"turns": df.select("conv_id", "turn_idx")},
+        "two_level": {"turns": df.select("conv_id", "turn_idx"),
+                      "seq_bucket": 2, "adaptive": False},
+    }[path]
+
+    def ranks(frame):
+        return sorted(
+            ((r.conv_id or "", r.turn_idx, r.turn_seq)
+             for r in ordered_output(frame, **kwargs).collect()),
+        )
+
+    plain = ranks(df)
+    assert len(plain) == len(rows)
+    assert ("", 9, 3) in plain
+    assert ranks(bucketed(df, n_buckets=4)) == plain
+
+
+def test_run_pipeline_one_file_per_bucket(spark, tmp_path):
+    """The ordering exchange is keyed on the output bucket, so each bucket
+    is written by exactly one task: one parquet file per written bucket,
+    even when the post-shuffle stage runs several tasks."""
+    import glob
+
+    df = generate_transcripts(spark, n_convs=40, seed=17, mega_every=0,
+                              partitions=3)
+    out = str(tmp_path / "out")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")  # keep every shuffle partition a task
+    try:
+        res = run_pipeline(spark, df, out, str(tmp_path / "lin"),
+                           n_buckets=8)
+    finally:
+        spark.conf.set(key, before)
+    assert res["rows"] == df.count() and res["buckets"] == 8
+    per_bucket = {
+        b: len(glob.glob(os.path.join(out, f"bucket={b}", "*.parquet")))
+        for b in range(8)
+    }
+    assert per_bucket == {b: 1 for b in range(8)}
 
 
 def test_ordered_output_adaptive_small_convs_take_legacy_plan(spark):
@@ -383,10 +538,7 @@ def test_catalog_table_source(spark, tmp_path):
     catalog (saveAsTable -> spark.read.table) convert identically to the
     parquet-path source — the sandbox stand-in for an Iceberg catalog
     table (SURVEY §7.6: Iceberg resolves through spark.read.table)."""
-    from anytomd_spark.pipeline import run_pipeline
-    from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA, fixture_transcripts
-
-    pdf = fixture_transcripts()
+    pdf = inrepo_transcripts(spark)
     df = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
     # managed table in the session warehouse; dropped (with data) below
     df.write.mode("overwrite").saveAsTable("transcripts_tbl")
@@ -421,12 +573,59 @@ def test_struct_udf_binding_equivalent(spark):
     assert a == b
 
 
+def test_resume_unreadable_lineage_raises(spark, tmp_path):
+    """A lineage path that exists but cannot be read is not a first run:
+    run_pipeline raises before converting anything, instead of silently
+    re-converting every bucket."""
+    lin = tmp_path / "lin"
+    lin.mkdir()
+    (lin / "part-00000.parquet").write_text("not a parquet file")
+    df = generate_transcripts(spark, n_convs=4, seed=5, mega_every=0,
+                              partitions=1)
+    with pytest.raises(Exception):
+        run_pipeline(spark, df, str(tmp_path / "out"), str(lin), n_buckets=4)
+    assert not (tmp_path / "out").exists()
+
+
+@pytest.mark.parametrize("state", ["missing", "empty"])
+def test_resume_without_lineage_is_first_run(spark, tmp_path, state):
+    """No lineage yet (no directory, or one a crashed first append left
+    with only its hidden staging directory) is a first run: every bucket
+    converts."""
+    lin = tmp_path / "lin"
+    if state == "empty":
+        (lin / "_temporary" / "0").mkdir(parents=True)
+    df = generate_transcripts(spark, n_convs=4, seed=5, mega_every=0,
+                              partitions=1)
+    res = run_pipeline(spark, df, str(tmp_path / "out"), str(lin),
+                       n_buckets=4)
+    assert res["rows"] == df.count() and res["buckets"] > 0
+    assert spark.read.parquet(str(lin)).count() == res["buckets"]
+
+
+def test_resume_probe_iceberg_table_exists(spark, monkeypatch):
+    """Iceberg: only a missing table (catalog.tableExists false) is a
+    first run; a read failure on an existing table propagates."""
+    from anytomd_spark import pipeline, table_io
+
+    exists = {"flag": False}
+    monkeypatch.setattr(type(spark.catalog), "tableExists",
+                        lambda self, name: exists["flag"])
+
+    def unreadable(spark_, target, storage):
+        raise RuntimeError("lineage table unreadable")
+
+    monkeypatch.setattr(table_io, "read_lineage", unreadable)
+    assert pipeline._done_buckets(spark, "cat.db.lin", "iceberg") == set()
+    exists["flag"] = True
+    with pytest.raises(RuntimeError, match="unreadable"):
+        pipeline._done_buckets(spark, "cat.db.lin", "iceberg")
+
+
 def test_run_pipeline_empty_input(spark, tmp_path):
     """Zero input rows: run_pipeline must report zero work, append no
     lineage, and NOT crash on re-reading a nonexistent output (review
     finding: range(n_buckets) scoping + empty write)."""
-    from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
-
     empty = spark.createDataFrame([], schema=TRANSCRIPTS_SCHEMA)
     res = run_pipeline(spark, empty, str(tmp_path / "out"),
                        str(tmp_path / "lin"), n_buckets=4)
