@@ -37,10 +37,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None)
     ap.add_argument("--buckets", type=int, default=4096,
                     help="output/lineage bucket count (resume granularity)")
-    ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--salted", action="store_true",
                     help="salted repartition before the kernel (use when "
-                         "the source layout is conversation-clustered)")
+                         "the source layout is conversation-clustered); "
+                         "it shuffles into spark.sql.shuffle.partitions "
+                         "tasks, which build_session sets to 32")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--max-input-bytes", default="8GiB",
@@ -71,7 +72,6 @@ def main(argv: list[str] | None = None) -> int:
         run_id=args.run_id,
         n_buckets=args.buckets,
         resume=not args.no_resume,
-        partitions=args.partitions,
         salted=args.salted,
         strict=args.strict,
         max_input_bytes=max_input_bytes,

@@ -11,7 +11,6 @@ edges so the walker sees an equivalent Open/Close stream).
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
 
 from anytomd_spark.kernels import markdown as md
 
@@ -575,8 +574,8 @@ class _Walker:
     # Implied end tags (subset of WHATWG tree construction: html5ever
     # closes unclosed li/p/tr/td; we synthesize the same close edges) and
     # stack discipline live HERE so the fast tokenizer drives the walker
-    # with no intermediate parser frame; the stdlib html.parser path
-    # adapts through _EdgeParser onto the same methods.
+    # with no intermediate parser frame; the stdlib html.parser oracle
+    # in tests/ adapts onto the same methods.
 
     # The per-event membership probes (void / implied-trigger / p-closer /
     # capture + the open/close dispatch .get) are folded into ONE
@@ -745,67 +744,6 @@ def _build_tag_info() -> dict[str, tuple]:
 _TAG_INFO = _build_tag_info()
 
 
-class _EdgeParser(HTMLParser):
-    """stdlib-tokenizer adapter onto the walker's edge layer.
-
-    Tree construction (implied end tags, stack discipline) lives in
-    _Walker.edge_* so both tokenizer paths share one implementation; this
-    class only adapts html.parser's callback shapes and EOF quirks.
-    """
-
-    # html.parser only treats script/style as raw text; the WHATWG spec
-    # (and html5ever, which the reference uses) also parses title and
-    # textarea as RCDATA — '<p>' inside <title> is TEXT, not a tag.
-    # Registering them here keeps the stdlib path equivalent to the fast
-    # tokenizer's raw-text mode (differential-fuzz-found divergence on
-    # unterminated titles).
-    CDATA_CONTENT_ELEMENTS = ("script", "style", "title", "textarea")
-
-    def __init__(self, walker: _Walker) -> None:
-        super().__init__(convert_charrefs=True)
-        self.walker = walker
-
-    def handle_starttag(self, tag: str, attrs: list) -> None:
-        # walkers only read attrs; share one empty dict for the common case
-        self.walker.edge_starttag(
-            tag, dict(attrs) if attrs else _EMPTY_ATTRS
-        )
-
-    def handle_startendtag(self, tag: str, attrs: list) -> None:
-        w = self.walker
-        attrs_dict = dict(attrs) if attrs else _EMPTY_ATTRS
-        w.handle_open(tag, attrs_dict)
-        w.handle_close(tag)
-
-    def handle_endtag(self, tag: str) -> None:
-        self.walker.edge_endtag(tag)
-
-    def handle_data(self, data: str) -> None:
-        self.walker.edge_text(data)
-
-    def close(self) -> None:
-        # unterminated markup declaration at EOF ('<!...' / '<?...' with
-        # no '>'): the WHATWG bogus-comment state swallows it (html5ever
-        # and the fast tokenizer agree); html.parser would emit it as
-        # data — drop the buffered tail instead
-        if (not self.cdata_elem and self.rawdata
-                and self.rawdata.startswith(("<!", "<?"))
-                and ">" not in self.rawdata):
-            self.rawdata = ""
-        # unterminated RCDATA/raw-text element at EOF: html.parser's
-        # goahead() buffers the tail forever (never emits it), but the
-        # WHATWG spec — and html5ever, and the fast tokenizer — emit the
-        # pending content as text. Flush it before closing.
-        if self.cdata_elem and self.rawdata:
-            elem = self.cdata_elem
-            data, self.rawdata = self.rawdata, ""
-            self.clear_cdata_mode()
-            self.handle_data(data)
-            self.handle_endtag(elem)
-        super().close()
-        self.walker.edge_eof()
-
-
 # ---- fast tokenizer ----------------------------------------------------
 #
 # A single-regex scan replacing html.parser's goahead loop (which costs
@@ -935,34 +873,9 @@ def _fast_feed(walker: "_Walker", text: str) -> None:
             break
 
 
-def convert_html(data: bytes, fast: bool = True) -> dict:
-    """Convert HTML bytes to (markdown, plain, title) per html.rs:22-40.
-
-    Three tiers: the native C walker (kernels/_html_fast.c, ~4x) for
-    documents inside its verified envelope (no charrefs, plain tag
-    markup — it BAILS to Python on anything else, so it can only be
-    faster, never different; byte-parity locked by
-    tests/test_html_native.py over fixtures + fuzz + the bench corpus),
-    then the regex fast tokenizer, then the stdlib html.parser path
-    (``fast=False``) kept as the differential oracle."""
-    text = data.decode("utf-8")  # html.rs:27 errors on invalid UTF-8
-    if text.startswith("﻿"):
-        text = text[1:]
-    if fast:
-        from anytomd_spark.kernels._html_native import convert_html_native
-
-        native = convert_html_native(text)
-        if native is not None:
-            return native
-    walker = _Walker()
-    if fast:
-        _fast_feed(walker, text)
-        walker.edge_eof()
-    else:
-        parser = _EdgeParser(walker)
-        parser.feed(text)
-        parser.close()
-
+def _finish(walker: "_Walker") -> dict:
+    """Assemble a fed walker's result: stripped Markdown and plain text,
+    each ending in one newline when non-empty, and the title."""
     out = walker.out.take().strip()
     if out:
         out += "\n"
@@ -976,3 +889,27 @@ def convert_html(data: bytes, fast: bool = True) -> dict:
         "title": title,
         "warnings": [],
     }
+
+
+def convert_html(data: bytes) -> dict:
+    """Convert HTML bytes to (markdown, plain, title) per html.rs:22-40.
+
+    Two tiers: the native C walker (kernels/_html_fast.c, ~4x) for
+    documents inside its verified envelope (no charrefs, plain tag
+    markup — it BAILS to Python on anything else, so it can only be
+    faster, never different; byte-parity locked by
+    tests/test_html_native.py over fixtures + fuzz + the bench corpus),
+    then the regex fast tokenizer. A stdlib html.parser walk of the same
+    walker is kept under tests/ as the differential oracle."""
+    text = data.decode("utf-8")  # html.rs:27 errors on invalid UTF-8
+    if text.startswith("\ufeff"):
+        text = text[1:]
+    from anytomd_spark.kernels._html_native import convert_html_native
+
+    native = convert_html_native(text)
+    if native is not None:
+        return native
+    walker = _Walker()
+    _fast_feed(walker, text)
+    walker.edge_eof()
+    return _finish(walker)

@@ -21,3 +21,64 @@ def normalize(s: str) -> str:
         result.append(line)
         prev_blank = is_blank
     return "\n".join(result).rstrip()
+
+
+def fixture_transcripts():
+    """One conversation whose turns are exactly the reference fixtures
+    (input of the golden end-to-end Spark test)."""
+    import base64
+    import datetime
+
+    import pandas as pd
+
+    from anytomd_spark.transcripts import _BASE_TS
+
+    names = [
+        "sample.html", "sample.csv", "sample.json", "sample.xml",
+        "sample.txt", "sample.py", "sample.ipynb", "sample.docx",
+        "sample.pptx", "sample.xlsx", "sample.xls", "sample_unicode.xls",
+    ]
+    binary = {"sample.docx", "sample.pptx", "sample.xlsx", "sample.xls",
+              "sample_unicode.xls"}
+    rows = []
+    for i, name in enumerate(names):
+        with open(os.path.join(FIXTURES, name), "rb") as f:
+            data = f.read()
+        if name in binary:
+            text = base64.b64encode(data).decode("ascii")
+            tool = ""
+        else:
+            text = data.decode("utf-8")
+            tool = name.rsplit(".", 1)[-1]
+        rows.append((
+            "conv-fixtures", i, ("user", "assistant")[i % 2], text, tool,
+            _BASE_TS + datetime.timedelta(seconds=i),
+        ))
+    return pd.DataFrame(
+        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    )
+
+
+def inrepo_transcripts(spark):
+    """Pipeline-mechanics input that ships with the repo: one conversation
+    (``conv-binfixtures``) of the binfixtures payloads (DOCX, PPTX, XLSX,
+    XLS, ipynb), in ``BIN_FIXTURES`` order from turn 0, plus a few
+    generated conversations of the text formats."""
+    import pandas as pd
+
+    from anytomd_spark.binfixtures import BIN_FIXTURES
+    from anytomd_spark.transcripts import generate_transcripts
+
+    generated = generate_transcripts(
+        spark, n_convs=6, seed=5, mega_every=0, partitions=1
+    ).toPandas()
+    ts = generated.ts.iloc[0]
+    binary = pd.DataFrame(
+        [
+            ("conv-binfixtures", i, "user", payload,
+             "ipynb" if fmt == "ipynb" else "", ts)
+            for i, (fmt, (payload, _md, _n)) in enumerate(BIN_FIXTURES.items())
+        ],
+        columns=generated.columns,
+    )
+    return pd.concat([binary, generated], ignore_index=True)

@@ -362,10 +362,8 @@ class TestBatchMemoization:
         # shapes, magic-vs-hint priority, and non-string cells
         import random
 
-        from anytomd_spark.batch import (
-            _classify_formats_pandas,
-            classify_formats,
-        )
+        from anytomd_spark.batch import classify_formats
+        from tests.oracles import classify_formats_pandas
 
         pool = [
             ("UEsDBxyzzy", ""), ("0M8Rabc", ""), ("%PDF-1.4", ""),
@@ -389,7 +387,7 @@ class TestBatchMemoization:
         t = pd.Series(payloads, dtype=object)
         tool = pd.Series(hints, dtype=object)
         assert list(classify_formats(t, tool)) == list(
-            _classify_formats_pandas(t, tool)
+            classify_formats_pandas(t, tool)
         )
 
     def test_hint_variants_share_memo_entries(self, monkeypatch):

@@ -18,7 +18,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from anytomd_spark.kernels._html_native import _get_lib, convert_html_native
-from anytomd_spark.kernels.html_conv import _Walker, _fast_feed, convert_html
+from anytomd_spark.kernels.html_conv import (
+    _fast_feed,
+    _finish,
+    _Walker,
+    convert_html,
+)
+from tests.oracles import convert_html_stdlib
 
 _FUZZ_MULT = 1
 
@@ -27,13 +33,8 @@ def _py_fast(text: str) -> tuple:
     w = _Walker()
     _fast_feed(w, text)
     w.edge_eof()
-    out = w.out.take().strip()
-    if out:
-        out += "\n"
-    plain = w.plain.take().strip()
-    if plain:
-        plain += "\n"
-    return out, plain, (w.title_text or w.first_h1_text)
+    r = _finish(w)
+    return r["markdown"], r["plain_text"], r["title"]
 
 
 def _assert_native_matches(text: str) -> bool:
@@ -77,9 +78,7 @@ class TestNativeDifferential:
 
         for i in range(50):
             data = build_html(random.Random(1000 + i)).encode("utf-8")
-            fast = convert_html(data, fast=True)
-            ref = convert_html(data, fast=False)
-            assert fast == ref
+            assert convert_html(data) == convert_html_stdlib(data)
 
     _SOUP = (
         "<p>", "</p>", "<div>", "</div>", "<span>", "</span>",

@@ -27,6 +27,7 @@ from anytomd_spark.kernels.simple import (
     convert_plain_text,
 )
 from anytomd_spark.kernels.html_conv import convert_html
+from tests.oracles import convert_html_stdlib
 
 
 class TestByteSize:
@@ -183,19 +184,19 @@ class TestFastTokenizerDifferential:
 
         for i in range(200):
             payload = build_html(random.Random(i)).encode("utf-8")
-            assert convert_html(payload, fast=True) == convert_html(
-                payload, fast=False
+            assert convert_html(payload) == convert_html_stdlib(
+                payload
             ), f"divergence at corpus doc {i}"
 
     def test_fixture_equivalence(self):
         with open("/root/reference/tests/fixtures/sample.html", "rb") as f:
             data = f.read()
-        assert convert_html(data, fast=True) == convert_html(data, fast=False)
+        assert convert_html(data) == convert_html_stdlib(data)
 
     @given(st.text(max_size=200))
     @settings(max_examples=150 * _FUZZ_MULT, deadline=2000)
     def test_fast_never_panics(self, s):
-        out = convert_html(s.encode("utf-8"), fast=True)
+        out = convert_html(s.encode("utf-8"))
         assert out["markdown"] == "" or out["markdown"].endswith("\n")
 
     # structured tag soup: random nesting of handled/unhandled/void tags,
@@ -222,9 +223,7 @@ class TestFastTokenizerDifferential:
     @settings(max_examples=300 * _FUZZ_MULT, deadline=5000)
     def test_fast_tag_soup_differential(self, parts):
         data = "".join(parts).encode("utf-8")
-        assert convert_html(data, fast=True) == convert_html(
-            data, fast=False
-        )
+        assert convert_html(data) == convert_html_stdlib(data)
 
 
 class TestWinnowBitParity:

@@ -8,7 +8,12 @@ import os
 
 import pytest
 
-from tests.conftest import FIXTURES, normalize
+from tests.conftest import (
+    FIXTURES,
+    fixture_transcripts,
+    inrepo_transcripts,
+    normalize,
+)
 
 pyspark = pytest.importorskip("pyspark")
 
@@ -17,7 +22,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from anytomd_spark.pipeline import (  # noqa: E402
     build_session,
     bucketed,
-    compute_fmt_histogram,
     compute_lineage,
     convert_transcripts,
     ordered_output,
@@ -26,7 +30,6 @@ from anytomd_spark.pipeline import (  # noqa: E402
 from anytomd_spark.binfixtures import BIN_FIXTURES  # noqa: E402
 from anytomd_spark.transcripts import (  # noqa: E402
     TRANSCRIPTS_SCHEMA,
-    fixture_transcripts,
     generate_transcripts,
 )
 
@@ -38,32 +41,22 @@ def spark():
     s.stop()
 
 
-def inrepo_transcripts(spark):
-    """Pipeline-mechanics input that ships with the repo: one conversation
-    of the binfixtures payloads (DOCX, PPTX, XLSX, XLS, ipynb) plus a few
-    generated conversations of the text formats."""
-    import pandas as pd
-
-    generated = generate_transcripts(
-        spark, n_convs=6, seed=5, mega_every=0, partitions=1
-    ).toPandas()
-    ts = generated.ts.iloc[0]
-    binary = pd.DataFrame(
-        [
-            ("conv-binfixtures", i, "user", payload,
-             "ipynb" if fmt == "ipynb" else "", ts)
-            for i, (fmt, (payload, _md, _n)) in enumerate(BIN_FIXTURES.items())
-        ],
-        columns=generated.columns,
-    )
-    return pd.concat([binary, generated], ignore_index=True)
-
-
 GOLDEN_NAMES = [
     "sample.html", "sample.csv", "sample.json", "sample.xml",
     "sample.txt", "sample.py", "sample.ipynb", "sample.docx",
     "sample.pptx", "sample.xlsx", "sample.xls", "sample_unicode.xls",
 ]
+
+
+def _explain(frame) -> str:
+    """``frame.explain(True)`` as a string."""
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        frame.explain(True)
+    return buf.getvalue()
 
 
 def test_fixture_conversation_golden_equality(spark):
@@ -90,8 +83,8 @@ def test_fmt_histogram(spark):
     pdf = inrepo_transcripts(spark)
     df = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
     hist = {
-        r.fmt: r.n
-        for r in compute_fmt_histogram(convert_transcripts(df)).collect()
+        r.fmt: r["count"]
+        for r in convert_transcripts(df).groupBy("fmt").count().collect()
     }
     assert sum(hist.values()) == len(pdf)
     assert hist == convert_batch(pdf)["fmt"].value_counts().to_dict()
@@ -355,19 +348,53 @@ def test_compute_lineage_single_scan_matches_two_scan(spark):
 def test_verify_against_expected(spark):
     from anytomd_spark.pipeline import verify_against_expected
 
-    df = spark.createDataFrame(fixture_transcripts())
+    pdf = inrepo_transcripts(spark)
+    df = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
     converted = convert_transcripts(df)
     expected = converted.select("conv_id", "turn_idx", "markdown")
-    assert verify_against_expected(converted, expected)["ok"]
+    report = verify_against_expected(converted, expected)
+    assert report["ok"] and report["rows"] == len(pdf)
 
+    first = (F.col("conv_id") == "conv-binfixtures") & (F.col("turn_idx") == 0)
     tampered = expected.withColumn(
-        "markdown",
-        F.when(F.col("turn_idx") == 0, F.lit("WRONG")).otherwise(
-            F.col("markdown")
-        ),
+        "markdown", F.when(first, F.lit("WRONG")).otherwise(F.col("markdown"))
     )
     report = verify_against_expected(converted, tampered)
     assert report["mismatched"] == 1 and not report["ok"]
+
+
+def test_convert_transcripts_schema(spark, tmp_path):
+    """The one kernel binding declares transcripts + kernel outputs, over
+    a batch frame and over a transcripts stream alike, so the batch job
+    and the streaming queries cannot drift apart."""
+    from anytomd_spark.batch import OUTPUT_SPARK_SCHEMA
+    from anytomd_spark.streaming import read_transcripts_stream
+
+    want = spark.createDataFrame(
+        [], f"{TRANSCRIPTS_SCHEMA}, {OUTPUT_SPARK_SCHEMA}"
+    ).schema
+    batch = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
+    stream = read_transcripts_stream(spark, str(tmp_path))
+    assert stream.isStreaming
+    assert convert_transcripts(batch).schema == want
+    assert convert_transcripts(stream).schema == want
+
+
+def test_job_rejects_partitions_flag(tmp_path):
+    """--partitions is gone from the job CLI: argparse rejects it as an
+    unknown argument (exit status 2) before any session starts."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run(
+        [sys.executable, "-m", "anytomd_spark.job",
+         "--input", str(tmp_path / "in"), "--output", str(tmp_path / "out"),
+         "--lineage", str(tmp_path / "lin"), "--partitions", "8"],
+        cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert p.returncode == 2
+    assert "unrecognized arguments: --partitions 8" in p.stderr
 
 
 def test_salted_equals_unsalted_on_skewed_input(spark):
@@ -377,8 +404,7 @@ def test_salted_equals_unsalted_on_skewed_input(spark):
         spark, n_convs=12, seed=13, mega_every=6, mega_size=120, partitions=3
     )
     plain = convert_transcripts(df, repartition=False)
-    salted = convert_transcripts(df, partitions=4, salt_buckets=4,
-                                 repartition=True)
+    salted = convert_transcripts(df, partitions=4, repartition=True)
     key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
     rows_a = sorted(plain.collect(), key=key)
     rows_b = sorted(salted.collect(), key=key)
@@ -396,9 +422,6 @@ def test_ordered_output_mega_conversation_two_level(spark):
     (VERDICT r2 'What's wrong #2'). With an output ``bucket`` column the
     payload exchange is keyed on (bucket, _seq_bkt), so the bound holds
     there too."""
-    import contextlib
-    import io
-
     n = 1_000_000
     turns = spark.range(n).select(
         # computed, not a literal: the optimizer folds a constant conv_id
@@ -415,10 +438,7 @@ def test_ordered_output_mega_conversation_two_level(spark):
         out = ordered_output(frame, turns=turns, seq_bucket=65536)
         assert out.filter(F.col("turn_seq") != F.col("turn_idx") + 1).count() == 0
 
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            out.explain(True)
-        plan = buf.getvalue()
+        plan = _explain(out)
         # the two-level path is active: bucket key present in the plan, and
         # every row_number window spec includes it next to conv_id
         assert "_seq_bkt" in plan
@@ -446,14 +466,18 @@ def test_ordered_output_bucket_column_keeps_turn_seq(spark, path):
     kwargs = {
         "legacy": {},
         "adaptive": {"turns": df.select("conv_id", "turn_idx")},
+        # below the largest conversation (5 rows): the probe picks the
+        # two-level plan
         "two_level": {"turns": df.select("conv_id", "turn_idx"),
-                      "seq_bucket": 2, "adaptive": False},
+                      "seq_bucket": 2},
     }[path]
 
     def ranks(frame):
+        out = ordered_output(frame, **kwargs)
+        if path == "two_level":
+            assert "_seq_bkt" in _explain(out)
         return sorted(
-            ((r.conv_id or "", r.turn_idx, r.turn_seq)
-             for r in ordered_output(frame, **kwargs).collect()),
+            ((r.conv_id or "", r.turn_idx, r.turn_seq) for r in out.collect()),
         )
 
     plain = ranks(df)
@@ -492,9 +516,6 @@ def test_ordered_output_adaptive_small_convs_take_legacy_plan(spark):
     must fall back to the legacy single-window plan — no composite-key
     join, no _seq_bkt anywhere (VERDICT r3 #5: the small-conv common
     case paid the two-level cost unconditionally)."""
-    import contextlib
-    import io
-
     df = spark.createDataFrame(
         [("a", 0), ("a", 1), ("b", 0)], "conv_id string, turn_idx int"
     ).withColumn("payload", F.lit("p"))
@@ -502,10 +523,7 @@ def test_ordered_output_adaptive_small_convs_take_legacy_plan(spark):
     out = ordered_output(df, turns=turns, seq_bucket=64)
     got = {(r.conv_id, r.turn_idx): r.turn_seq for r in out.collect()}
     assert got == {("a", 0): 1, ("a", 1): 2, ("b", 0): 1}
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain(True)
-    assert "_seq_bkt" not in buf.getvalue()
+    assert "_seq_bkt" not in _explain(out)
 
 
 def test_ordered_output_sparse_turn_idx_matches_legacy(spark):
@@ -525,11 +543,10 @@ def test_ordered_output_sparse_turn_idx_matches_legacy(spark):
         (r.conv_id, r.turn_idx): r.turn_seq
         for r in ordered_output(df).collect()
     }
-    two_level = {
-        (r.conv_id, r.turn_idx): r.turn_seq
-        for r in ordered_output(df, turns=turns, seq_bucket=65536,
-                                adaptive=False).collect()
-    }
+    # seq_bucket below conversation a's 4 rows: the two-level plan runs
+    out = ordered_output(df, turns=turns, seq_bucket=2)
+    assert "_seq_bkt" in _explain(out)
+    two_level = {(r.conv_id, r.turn_idx): r.turn_seq for r in out.collect()}
     assert two_level == legacy
 
 
@@ -556,21 +573,6 @@ def test_catalog_table_source(spark, tmp_path):
         assert got.filter("markdown is null").count() == 0
     finally:
         spark.sql("DROP TABLE IF EXISTS transcripts_tbl")
-
-
-def test_struct_udf_binding_equivalent(spark):
-    """convert_transcripts_struct (scalar struct pandas_udf over
-    text+tool) must produce byte-identical rows to the mapInPandas
-    binding — the measured A/B and the prunability property live in
-    PLANS.md round-3."""
-    from anytomd_spark.pipeline import convert_transcripts_struct
-
-    df = generate_transcripts(spark, n_convs=25, seed=21, mega_every=0,
-                              partitions=3)
-    key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
-    a = sorted(convert_transcripts(df).collect(), key=key)
-    b = sorted(convert_transcripts_struct(df).collect(), key=key)
-    assert a == b
 
 
 def test_resume_unreadable_lineage_raises(spark, tmp_path):
@@ -675,43 +677,13 @@ def test_ordered_output_null_conv_id_not_dropped(spark):
     df = spark.createDataFrame(pdf, "conv_id string, turn_idx int") \
         .withColumn("payload", F.lit("p"))
     turns = df.select("conv_id", "turn_idx")
-    rows = ordered_output(df, turns=turns, seq_bucket=64,
-                          adaptive=False).collect()
+    # seq_bucket = the null conversation's 2 rows: the two-level plan runs
+    out = ordered_output(df, turns=turns, seq_bucket=2)
+    assert "_seq_bkt" in _explain(out)
+    rows = out.collect()
     assert len(rows) == 3
     got = {(r.conv_id, r.turn_idx): r.turn_seq for r in rows}
     assert got[(None, 0)] == 1 and got[(None, 1)] == 2 and got[("c", 0)] == 1
-
-
-def test_convert_distinct_equals_maponly(spark):
-    """convert_transcripts_distinct (dedup-before-convert) must produce
-    exactly the same rows as the shuffle-free map-only path, including
-    error rows, null payloads, and the duplicate-payload fast path."""
-    from anytomd_spark.pipeline import convert_transcripts_distinct
-
-    df = generate_transcripts(
-        spark, n_convs=30, seed=21, mega_every=0, partitions=3
-    )
-    # graft duplicates and edge rows onto the generated corpus
-    extra = spark.createDataFrame(
-        [
-            ("dup-conv", 0, "user", "<p>shared</p>", "", None),
-            ("dup-conv", 1, "user", "<p>shared</p>", "", None),
-            ("dup-conv", 2, "user", "<p>shared</p>", "html", None),
-            ("dup-conv", 3, "user", None, "", None),
-            ("dup-conv", 4, "user", None, None, None),
-            ("dup-conv", 5, "user", "%PDF-1.7 x", "pdf", None),
-            ("dup-conv", 6, "user", "%PDF-1.7 x", "pdf", None),
-        ],
-        schema=("conv_id string, turn_idx int, role string, text string, "
-                "tool string, ts timestamp"),
-    )
-    df = df.unionByName(extra)
-    key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
-    rows_a = sorted(convert_transcripts(df).collect(), key=key)
-    rows_b = sorted(
-        convert_transcripts_distinct(df, partitions=4).collect(), key=key
-    )
-    assert [r.asDict() for r in rows_a] == [r.asDict() for r in rows_b]
 
 
 def test_job_spark_submit_py_files(spark, tmp_path):

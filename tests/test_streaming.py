@@ -1,18 +1,17 @@
 """Structured Streaming conversion: availableNow catch-up run over the
-fixture conversation, checkpointed parquet sink, incremental resume."""
+binfixtures conversation plus generated turns, checkpointed parquet sink,
+incremental resume."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
+from anytomd_spark.binfixtures import BIN_FIXTURES  # noqa: E402
 from anytomd_spark.pipeline import build_session  # noqa: E402
 from anytomd_spark.streaming import start_conversion_stream  # noqa: E402
-from anytomd_spark.transcripts import fixture_transcripts  # noqa: E402
-from tests.conftest import FIXTURES, normalize  # noqa: E402
+from tests.conftest import inrepo_transcripts  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +28,7 @@ def test_streaming_conversion_and_resume(spark, tmp_path):
 
     from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
 
-    pdf = fixture_transcripts()
+    pdf = inrepo_transcripts(spark)
     first = spark.createDataFrame(pdf.iloc[:6], schema=TRANSCRIPTS_SCHEMA)
     first.write.mode("append").parquet(inp)
 
@@ -46,11 +45,17 @@ def test_streaming_conversion_and_resume(spark, tmp_path):
     q2.awaitTermination(120)
     got2 = spark.read.parquet(out)
     assert got2.count() == len(pdf)
+    assert got2.filter("error is not null").count() == 0
 
-    # golden equality survives the streaming path
-    row = got2.filter("turn_idx = 0").collect()[0]
-    with open(os.path.join(FIXTURES, "expected", "sample.html.md")) as f:
-        assert normalize(row.markdown) == normalize(f.read())
+    # golden equality survives the streaming path: every binfixtures turn
+    # streams to its expected Markdown, byte for byte
+    streamed = {
+        r.turn_idx: r.markdown
+        for r in got2.filter("conv_id = 'conv-binfixtures'").collect()
+    }
+    assert streamed == {
+        i: md for i, (_payload, md, _n) in enumerate(BIN_FIXTURES.values())
+    }
 
 
 def test_stateful_turn_dedup_across_restarts(spark, tmp_path):
@@ -150,11 +155,8 @@ def test_metrics_stream_windows_and_watermark(spark, tmp_path):
     DROPPED (state stays bounded at 10^12-turn scale)."""
     import pandas as pd
 
-    from anytomd_spark.streaming import (
-        convert_stream,
-        metrics_stream,
-        read_transcripts_stream,
-    )
+    from anytomd_spark.pipeline import convert_transcripts
+    from anytomd_spark.streaming import metrics_stream, read_transcripts_stream
     from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
 
     inp = str(tmp_path / "in")
@@ -172,7 +174,7 @@ def test_metrics_stream_windows_and_watermark(spark, tmp_path):
 
     def run_pass():
         met = metrics_stream(
-            convert_stream(read_transcripts_stream(spark, inp))
+            convert_transcripts(read_transcripts_stream(spark, inp))
         )
         q = (met.writeStream.format("parquet").option("path", out)
              .outputMode("append").option("checkpointLocation", ckpt)
