@@ -37,21 +37,6 @@ OUTPUT_SPARK_SCHEMA = (
     "bytes_in long, chars_out long"
 )
 
-# tool-column hint -> format, precomputed from the detection tables
-_HINT_TO_FMT: dict[str, str] = {}
-for _ext in list(sniff.CODE_EXTS):
-    _HINT_TO_FMT[_ext] = "code"
-for _ext in ("html", "htm"):
-    _HINT_TO_FMT[_ext] = "html"
-for _ext in ("docx", "pptx", "xlsx", "xls", "csv", "ipynb", "json", "pdf", "xml"):
-    _HINT_TO_FMT[_ext] = _ext
-for _ext in ("txt", "text", "log", "md", "markdown", "rst", "ini", "cfg",
-             "conf", "toml", "yaml", "yml"):
-    _HINT_TO_FMT[_ext] = "txt"
-for _ext in sniff._IMAGE_EXTS:
-    _HINT_TO_FMT[_ext] = "image"
-
-
 _WS_SET = frozenset(" \t\r\n\x0b\x0c")
 _MARKUP_RE = _re.compile(
     r"<head|<body|<div|<p>|<p |<table|<h1|<ul|<span|<br"
@@ -76,7 +61,7 @@ def classify_formats(text: pd.Series, tool: pd.Series) -> pd.Series:
     hvals = tool.to_numpy(dtype=object)
     out: list = [None] * n
     hint_memo: dict[str, str | None] = {}
-    hint_get = _HINT_TO_FMT.get
+    hint_get = sniff.EXT_TO_FMT.get
     ws = _WS_SET
     search = _MARKUP_RE.search
     for i in range(n):

@@ -41,7 +41,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="salted repartition before the kernel (use when "
                          "the source layout is conversation-clustered); "
                          "it shuffles into spark.sql.shuffle.partitions "
-                         "tasks, which build_session sets to 32")
+                         "tasks: 32 unless given with spark-submit --conf")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--max-input-bytes", default="8GiB",

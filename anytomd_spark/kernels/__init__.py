@@ -5,7 +5,4 @@ Each module reimplements the semantics of one reference converter
 pandas UDF workers; keep them dependency-free and deterministic.
 """
 
-from anytomd_spark.kernels.convert import (  # noqa: F401
-    convert_bytes,
-    convert_payload,
-)
+from anytomd_spark.kernels.convert import convert_bytes  # noqa: F401

@@ -1,4 +1,7 @@
-"""Format detection for turn payloads.
+"""Format detection: the extension table, base64 binary magic, ZIP
+introspection, and the magic-first sniffer for archive members
+(:func:`sniff_bytes`). Turn payloads are classified a batch at a time by
+``batch.classify_formats``, which uses these pieces.
 
 Mirrors ``/root/reference/src/detection.rs`` (detect_format :18-48,
 detect_zip_format :54-74, detect_by_extension :77-100) and the dispatcher
@@ -38,6 +41,17 @@ CODE_EXTS = {
 
 _DIRECT = {"docx", "pptx", "xlsx", "xls", "csv", "ipynb", "json", "pdf", "xml"}
 
+# extension -> format (detection.rs:77-100). Later entries win, so the
+# literal reads lowest priority first; the tables are disjoint anyway.
+EXT_TO_FMT: dict[str, str] = {
+    **{ext: "code" for ext in CODE_EXTS},
+    **{ext: "image" for ext in _IMAGE_EXTS},
+    **{ext: "txt" for ext in _TXT_EXTS},
+    "html": "html",
+    "htm": "html",
+    **{ext: ext for ext in _DIRECT},
+}
+
 
 def normalize_extension(ext: str) -> str:
     """Trim, strip one leading dot, lowercase (lib.rs:233-238)."""
@@ -49,17 +63,7 @@ def normalize_extension(ext: str) -> str:
 
 def detect_by_extension(ext: str) -> str | None:
     """Extension -> format name (detection.rs:77-100). ``ext`` pre-normalized."""
-    if ext in _DIRECT:
-        return ext
-    if ext in ("html", "htm"):
-        return "html"
-    if ext in _TXT_EXTS:
-        return "txt"
-    if ext in _IMAGE_EXTS:
-        return "image"
-    if ext in CODE_EXTS:
-        return "code"
-    return None
+    return EXT_TO_FMT.get(ext)
 
 
 def _zip_names_raw(data: bytes) -> "list[bytes] | None":
@@ -129,10 +133,24 @@ def maybe_base64_binary(payload: str) -> bytes | None:
     return None
 
 
-def _sniff_text_content(payload: str) -> str | None:
-    """Textual content heuristics shared by :func:`sniff_format` (turn
-    payloads) and :func:`sniff_bytes` (archive members): the JSON
-    heuristic of detection.rs:38-46, then html-ish / xml-ish markup."""
+def sniff_bytes(data: bytes) -> str | None:
+    """Magic-first detection for raw member bytes (archive ingestion).
+
+    Mirrors the reference's detection priority (detection.rs:18-48):
+    magic bytes first — ZIP magic -> container introspection (OOXML or
+    a plain ``zip`` the dispatcher will reject loudly), OLE2 -> xls,
+    ``%PDF`` -> pdf — then the textual heuristics over a lossy UTF-8
+    decode of the head. Returns None when nothing matches (the
+    caller falls back to plain text, detection.rs's final arm).
+    """
+    if data[:4] == b"PK\x03\x04":
+        return detect_zip_format(data) or "zip"
+    if data[:4] == b"\xd0\xcf\x11\xe0":
+        return "xls"
+    if data[:4] == b"%PDF":
+        return "pdf"
+    payload = data[:4096].decode("utf-8", errors="replace")
+    # the JSON heuristic of detection.rs:38-46, then html-/xml-ish markup
     stripped = payload[1:] if payload.startswith("﻿") else payload
     head = stripped.lstrip(" \t\r\n\x0b\x0c")
     if head[:1] in ("{", "["):
@@ -146,52 +164,3 @@ def _sniff_text_content(payload: str) -> str | None:
     if low.startswith("<?xml") or (head[:1] == "<" and ">" in head):
         return "xml"
     return None
-
-
-def sniff_bytes(data: bytes) -> str | None:
-    """Magic-first detection for raw member bytes (archive ingestion).
-
-    Mirrors the reference's detection priority (detection.rs:18-48):
-    magic bytes first — ZIP magic -> container introspection (OOXML or
-    a plain ``zip`` the dispatcher will reject loudly), OLE2 -> xls,
-    ``%PDF`` -> pdf — then the shared textual heuristics over a lossy
-    UTF-8 decode of the head. Returns None when nothing matches (the
-    caller falls back to plain text, detection.rs's final arm).
-    """
-    if data[:4] == b"PK\x03\x04":
-        return detect_zip_format(data) or "zip"
-    if data[:4] == b"\xd0\xcf\x11\xe0":
-        return "xls"
-    if data[:4] == b"%PDF":
-        return "pdf"
-    return _sniff_text_content(data[:4096].decode("utf-8", errors="replace"))
-
-
-def sniff_format(payload: str, ext_hint: str | None) -> tuple[str | None, bytes | None]:
-    """Resolve the format of one turn payload.
-
-    Returns (format, binary_bytes|None). Priority mirrors convert_file
-    (lib.rs:95-139): magic -> ZIP introspection -> extension hint -> JSON
-    heuristic; plus a content fallback for hint-less transcript turns
-    (documented extension beyond the reference, which requires a filename).
-    """
-    # 1. Magic bytes (textual or base64-carried binary)
-    binary = maybe_base64_binary(payload)
-    if binary is not None:
-        if binary.startswith(b"PK\x03\x04"):
-            fmt = detect_zip_format(binary)
-            return (fmt, binary) if fmt else (None, binary)
-        if binary.startswith(b"\xd0\xcf\x11\xe0"):
-            return "xls", binary
-    if payload.startswith("%PDF"):
-        return "pdf", None
-
-    # 2. Extension hint (the `tool` column)
-    if ext_hint:
-        fmt = detect_by_extension(normalize_extension(ext_hint))
-        if fmt is not None:
-            return fmt, None
-
-    # 3 + 4. Shared textual heuristics (JSON, then markup fallback)
-    fmt = _sniff_text_content(payload)
-    return (fmt, None) if fmt else (None, None)

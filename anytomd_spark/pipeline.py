@@ -28,6 +28,7 @@ local[32]):
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 
@@ -71,6 +72,10 @@ def build_session(
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
     }
+    # builder options override spark-submit --conf, so a key the launched
+    # JVM already holds keeps its submitted value; extra_conf wins over both
+    submitted = _submitted_conf_keys()
+    conf = {k: v for k, v in conf.items() if k not in submitted}
     conf.update(extra_conf or {})
     for k, v in conf.items():
         builder = builder.config(k, v)
@@ -89,13 +94,25 @@ def build_session(
     return spark
 
 
+def _submitted_conf_keys() -> set[str]:
+    """Spark keys set on the JVM that launched this driver (spark-submit
+    exports ``PYSPARK_GATEWAY_PORT``). Under plain ``python`` no JVM is
+    running yet and none is started here, so launch-time keys such as
+    ``spark.driver.memory`` still reach the JVM the builder launches."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return set()
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return {k for k, _v in SparkConf().getAll()}
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship anytomd_spark to the Python workers (the --py-files analogue
     for library/driver-side use; idempotent per session)."""
     sc = spark.sparkContext
     if getattr(sc, "_anytomd_shipped", False):
         return
-    import os
     import tempfile
     import zipfile
 

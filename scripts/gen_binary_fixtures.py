@@ -1,6 +1,6 @@
 """Generate anytomd_spark/binfixtures.py: fixed base64 payloads for the
 five binary formats (DOCX/PPTX/XLSX/XLS/IPYNB) plus their expected
-Markdown, captured from the conversion kernels themselves.
+Markdown, captured from the production row kernel (``convert_batch``).
 
 The payloads are deterministic in-memory documents (fixed ZIP timestamps,
 stored compression) exercising real converter features — headings, bold
@@ -15,13 +15,17 @@ from __future__ import annotations
 
 import base64
 import io
+import os
 import struct
 import sys
 import zipfile
 
-sys.path.insert(0, "/root/repo")
+import pandas as pd
 
-from anytomd_spark.kernels.convert import convert_payload  # noqa: E402
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from anytomd_spark.batch import convert_batch  # noqa: E402
 
 W = ('xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main" '
      'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"')
@@ -242,26 +246,22 @@ IPYNB = """{
 
 
 def main() -> None:
+    rows = [
+        (fmt, base64.b64encode(data).decode("ascii"), "", len(data))
+        for fmt, data in (("docx", build_docx()), ("pptx", build_pptx()),
+                          ("xlsx", build_xlsx()), ("xls", build_xls()))
+    ]
+    rows.append(("ipynb", IPYNB, "ipynb", len(IPYNB.encode())))
+    # the passthrough columns (want, nbytes) come back beside the outputs
+    out = convert_batch(
+        pd.DataFrame(rows, columns=["want", "text", "tool", "nbytes"]))
     fixtures = {}
-    for fmt, payload, hint in (
-        ("docx", build_docx(), None),
-        ("pptx", build_pptx(), None),
-        ("xlsx", build_xlsx(), None),
-        ("xls", build_xls(), None),
-    ):
-        b64 = base64.b64encode(payload).decode("ascii")
-        out = convert_payload(b64, hint)
-        assert out["error"] is None, (fmt, out["error"])
-        assert out["fmt"] == fmt, (fmt, out["fmt"])
-        assert not out["warnings"], (fmt, out["warnings"])
-        fixtures[fmt] = (b64, out["markdown"], len(payload))
-        print(f"{fmt}: {len(payload)} bytes, md {len(out['markdown'])} chars")
-
-    out = convert_payload(IPYNB, "ipynb")
-    assert out["error"] is None, out["error"]
-    assert out["fmt"] == "ipynb"
-    fixtures["ipynb"] = (IPYNB, out["markdown"], len(IPYNB.encode()))
-    print(f"ipynb: md {len(out['markdown'])} chars")
+    for row in out.itertuples():
+        assert row.error is None, (row.want, row.error)
+        assert row.fmt == row.want, (row.want, row.fmt)
+        assert row.n_warnings == 0, (row.want, row.warning_codes)
+        fixtures[row.fmt] = (row.text, row.markdown, row.nbytes)
+        print(f"{row.fmt}: {row.nbytes} bytes, md {len(row.markdown)} chars")
 
     lines = [
         '"""Fixed binary-format fixtures for the driver correctness gate.',
@@ -281,7 +281,7 @@ def main() -> None:
         lines.append(f"        {nbytes},")
         lines.append("    ),")
     lines.append("}")
-    path = "/root/repo/anytomd_spark/binfixtures.py"
+    path = os.path.join(ROOT, "anytomd_spark", "binfixtures.py")
     with open(path, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {path}")

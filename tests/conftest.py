@@ -23,6 +23,19 @@ def normalize(s: str) -> str:
     return "\n".join(result).rstrip()
 
 
+def convert_turn(payload, hint=None, **kw) -> dict:
+    """One turn through the production row kernel: a one-row
+    ``convert_batch`` (``kw`` are its keyword arguments), returned as a
+    dict of the ``OUTPUT_FIELDS`` columns."""
+    import pandas as pd
+
+    from anytomd_spark.batch import OUTPUT_FIELDS, convert_batch
+
+    frame = pd.DataFrame({"text": [payload], "tool": [hint]})
+    out = convert_batch(frame, **kw)
+    return {name: out[name].iloc[0] for name, _ in OUTPUT_FIELDS}
+
+
 def fixture_transcripts():
     """One conversation whose turns are exactly the reference fixtures
     (input of the golden end-to-end Spark test)."""

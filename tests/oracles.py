@@ -16,8 +16,8 @@ from html.parser import HTMLParser
 
 import pandas as pd
 
-from anytomd_spark.batch import _HINT_TO_FMT
 from anytomd_spark.kernels.html_conv import _EMPTY_ATTRS, _finish, _Walker
+from anytomd_spark.kernels.sniff import EXT_TO_FMT
 
 
 def classify_formats_pandas(text: pd.Series, tool: pd.Series) -> pd.Series:
@@ -43,7 +43,7 @@ def classify_formats_pandas(text: pd.Series, tool: pd.Series) -> pd.Series:
 
     # 2. tool hint
     hints = tool.fillna("").str.strip().str.lstrip(".").str.lower()
-    hinted = hints.map(_HINT_TO_FMT)
+    hinted = hints.map(EXT_TO_FMT)
     take_hint = fmt.isna() & hinted.notna()
     fmt[take_hint] = hinted[take_hint]
 

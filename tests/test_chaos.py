@@ -5,12 +5,17 @@ itself never fails, and valid rows in the same batch still convert."""
 from __future__ import annotations
 
 import base64
+import io
+import os
+import zipfile
 
 import pandas as pd
 import pytest
 
 from anytomd_spark.batch import convert_batch
-from anytomd_spark.kernels.convert import convert_payload
+from anytomd_spark.kernels.convert import convert_bytes
+from anytomd_spark.kernels.ooxml import InputTooLarge
+from tests.conftest import convert_turn
 
 CORRUPT_CASES = [
     ("truncated-zip-docx", base64.b64encode(b"PK\x03\x04garbage").decode(), ""),
@@ -27,9 +32,60 @@ CORRUPT_CASES = [
 @pytest.mark.parametrize("name,payload,hint", CORRUPT_CASES,
                          ids=[c[0] for c in CORRUPT_CASES])
 def test_corrupt_payload_yields_error_row(name, payload, hint):
-    out = convert_payload(payload, hint or None)
+    out = convert_turn(payload, hint)
     assert out["error"] is not None, name
     assert out["markdown"] is None
+
+
+def _zip(name: str, member) -> bytes:
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr(name, member)
+    return buf.getvalue()
+
+
+# (name, payload, tool hint, fmt, error, markdown): what the row kernel
+# returns for payloads at the edges of format detection. Pinned so a
+# change to classify_formats or _convert_one shows up as a diff here.
+EDGE_CASES = [
+    ("png-b64-png-hint",
+     base64.b64encode(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16).decode(), "png",
+     "image", None, "![](image.png)\n"),
+    ("zip-not-ooxml", base64.b64encode(_zip("readme.txt", "hi")).decode(), "",
+     "zip", "unsupported format: unrecognized ZIP", None),
+    ("bad-base64-zip", "UEsDB!!!not-base64!!!", "",
+     None, "invalid base64 binary payload", None),
+    ("pdf-pdf-hint", "%PDF-1.7 binary", "pdf",
+     "pdf", "unsupported format: pdf", None),
+    ("pdf-txt-hint", "%PDF-1.7 binary", "txt",
+     "pdf", "unsupported format: pdf", None),
+    # the markup heuristic reads 256 chars: a '>' past them is not seen
+    ("markup-gt-past-256", "<" + "a" * 300 + ">", "",
+     None, "unsupported format", None),
+    ("bom-json", '\ufeff{"a": 1}', "",
+     "json", None, '```json\n{\n  "a": 1\n}\n```\n'),
+    # classified json (whitespace and one BOM are skipped), but the JSON
+    # converter itself rejects the BOM that follows the space
+    ("ws-bom-json", ' \ufeff{"a": 1}', "",
+     "json", "MalformedDocument: invalid JSON: Expecting value: "
+     "line 1 column 2 (char 1)", None),
+    ("ole-no-workbook",
+     base64.b64encode(b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 504)
+     .decode(), "",
+     "xls", "MalformedDocument: Workbook stream not found in OLE2 file",
+     None),
+    ("upper-dot-txt-hint", "hello world", ".TXT",
+     "txt", None, "hello world"),
+]
+
+
+@pytest.mark.parametrize("name,payload,hint,fmt,error,markdown", EDGE_CASES,
+                         ids=[c[0] for c in EDGE_CASES])
+def test_edge_payload_outputs_pinned(name, payload, hint, fmt, error,
+                                     markdown):
+    out = convert_turn(payload, hint)
+    assert (out["fmt"], out["error"], out["markdown"]) == (
+        fmt, error, markdown)
 
 
 def test_batch_mixes_good_and_bad_rows():
@@ -58,52 +114,36 @@ def test_batch_mixes_good_and_bad_rows():
 def test_encoding_fallback_payloads():
     # cp1252-ish content arrives as a str already (Spark string column);
     # at the bytes level the decoder falls back with a warning
-    out = convert_payload("Name,City\nAlice,Montréal\n", "csv")
+    out = convert_turn("Name,City\nAlice,Montréal\n", "csv")
     assert out["error"] is None
     assert "Montréal" in out["markdown"]
 
     # UTF-16LE BOM carried via base64? Not a ZIP/OLE magic -> treated as
     # opaque text; the txt path passes it through unchanged
-    out2 = convert_payload("plain text with BOM ﻿ inside", "txt")
+    out2 = convert_turn("plain text with BOM ﻿ inside", "txt")
     assert out2["error"] is None
 
 
-def test_huge_payload_rejected_by_size_guard():
-    out = convert_payload("x" * 1000, "txt", max_input_bytes=100)
-    assert out["error"] is not None and "exceeds limit" in out["error"]
-
-
 def test_zip_budget_guard():
-    import io
-    import zipfile
+    data = _zip("word/document.xml", "A" * 100_000)  # compresses tiny
+    with pytest.raises(InputTooLarge, match="exceeds limit"):
+        convert_bytes(data, "docx", max_zip_bytes=1000)
 
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("word/document.xml", "A" * 100_000)  # compresses tiny
-    payload = base64.b64encode(buf.getvalue()).decode()
-    out = convert_payload(payload, None, max_zip_bytes=1000)
-    assert out["error"] is not None and "exceeds limit" in out["error"]
 
 def test_adversarial_zip_rejected_without_decompression():
     """A 256 MB-uncompressed / ~KB-file zip bomb must be rejected from the
     central directory alone (TECH_SPEC.md:842 'abort ZIP-based parsing if
     uncompressed size exceeds budget'): the rejection has to be near-
     instant — decompressing first would take seconds and 256 MB of RAM."""
-    import io
     import time
-    import zipfile
 
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("word/document.xml", b"\x00" * (256 << 20))
-    data = buf.getvalue()
+    data = _zip("word/document.xml", b"\x00" * (256 << 20))
     assert len(data) < (1 << 20)  # ~250KB file claiming 256MB
 
-    payload = base64.b64encode(data).decode()
     t0 = time.perf_counter()
-    out = convert_payload(payload, None, max_zip_bytes=64 << 20)
+    with pytest.raises(InputTooLarge, match="exceeds limit"):
+        convert_bytes(data, "docx", max_zip_bytes=64 << 20)
     dt = time.perf_counter() - t0
-    assert out["error"] is not None and "exceeds limit" in out["error"]
     assert dt < 0.5, f"rejection took {dt:.2f}s — central dir not used?"
 
 
@@ -154,7 +194,8 @@ def test_near_limit_turn_in_memory_capped_worker():
     """)
     proc = subprocess.run(
         [sys.executable, "-c", script], capture_output=True, text=True,
-        timeout=300, cwd="/root/repo",
+        timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     rep = json.loads(proc.stdout.strip().splitlines()[-1])
@@ -169,8 +210,8 @@ def test_near_limit_turn_in_memory_capped_worker():
 
 
 def test_batch_image_hint_dispatch():
-    """tool='png' in the pipeline path matches convert_payload's image
-    dispatch (both paths emit the reference's empty-alt stub)."""
+    """tool='png' dispatches to the image converter, which emits the
+    reference's empty-alt stub."""
     png = base64.b64encode(
         b"\x89PNG\r\n\x1a\n" + b"\x00" * 16
     ).decode()
@@ -201,14 +242,22 @@ def test_batch_max_input_bytes_threaded():
 
 
 def test_batch_strict_mode_threaded():
-    # cp1252 fallback emits a warning -> strict turns it into a row error
-    latin1 = base64.b64encode("caf\xe9,x\n1,2\n".encode("cp1252")).decode()
+    # an unknown notebook cell type emits a warning -> strict turns it
+    # into a row error
+    notebook = '{"cells": [{"cell_type": "weird", "source": "x"}]}'
     pdf = pd.DataFrame(
-        [("c", 0, "user", "ok", "txt", None)],
+        [("c", 0, "user", "ok", "txt", None),
+         ("c", 1, "user", notebook, "ipynb", None)],
         columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
     )
+    lax = convert_batch(pdf)
+    assert lax["error"][1] is None
+    assert lax["warning_codes"][1] == ["SkippedElement"]
     out = convert_batch(pdf, strict=True)
     assert out["error"][0] is None  # warning-free row unaffected
+    assert out["error"][1].startswith(
+        "MalformedDocument: strict mode: encountered warning [SkippedElement]")
+    assert out["markdown"][1] is None
 
 
 class TestImageConverterParity:

@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from anytomd_spark.kernels.convert import convert_payload
+from anytomd_spark.kernels.convert import convert_bytes
 from anytomd_spark.kernels.docx_conv import convert_docx
 from anytomd_spark.kernels.html_conv import convert_html
 from anytomd_spark.kernels.pptx_conv import convert_pptx
@@ -27,7 +27,7 @@ from anytomd_spark.kernels.simple import (
 )
 from anytomd_spark.kernels.xls_conv import convert_xls
 from anytomd_spark.kernels.xlsx_conv import convert_xlsx
-from tests.conftest import FIXTURES, normalize
+from tests.conftest import FIXTURES, convert_turn, normalize
 
 CASES = [
     ("sample.csv", convert_csv, True),
@@ -69,7 +69,7 @@ def test_golden_titles():
     assert convert_ipynb(_load("sample.ipynb")[0])["title"] == "Sample Notebook"
 
 
-# ---- dispatcher end-to-end over payload strings (the pipeline entry) ----
+# ---- one turn end to end through the production row kernel ----
 
 _BINARY = {"sample.docx", "sample.pptx", "sample.xlsx", "sample.xls",
            "sample_unicode.xls"}
@@ -84,32 +84,32 @@ def test_dispatch_payload(name, fn, byte_exact):
     else:
         payload = data.decode("utf-8")
         hint = name.rsplit(".", 1)[-1]
-    out = convert_payload(payload, hint)
+    out = convert_turn(payload, hint)
     assert out["error"] is None, out["error"]
     assert normalize(out["markdown"]) == normalize(expected)
     assert out["chars_out"] == len(out["markdown"])
 
 
 def test_dispatch_pdf_rejected():
-    out = convert_payload("%PDF-1.4 fake", "pdf")
+    out = convert_turn("%PDF-1.4 fake", "pdf")
     assert out["fmt"] == "pdf"
     assert out["error"] is not None and "unsupported" in out["error"]
 
 
 def test_dispatch_unknown_format():
-    out = convert_payload("hello world", None)
+    out = convert_turn("hello world", None)
     assert out["fmt"] is None
     assert out["error"] is not None
 
 
 def test_dispatch_json_heuristic_no_hint():
-    out = convert_payload('  {"b": 1, "a": 2}', None)
+    out = convert_turn('  {"b": 1, "a": 2}', None)
     assert out["fmt"] == "json"
     assert '"a": 2' in out["markdown"]
 
 
 def test_dispatch_html_sniff_no_hint():
-    out = convert_payload("<html><body><h1>Hi</h1></body></html>", None)
+    out = convert_turn("<html><body><h1>Hi</h1></body></html>", None)
     assert out["fmt"] == "html"
     assert out["markdown"] == "# Hi\n"
 
@@ -117,11 +117,10 @@ def test_dispatch_html_sniff_no_hint():
 def test_dispatch_strict_mode():
     # cp1252 payload decodes with a warning -> strict converts it to error
     payload = b"Name,City\nAlice,Montr\xe9al\n".decode("cp1252")
-    ok = convert_payload(payload, "csv", strict=False)
+    ok = convert_turn(payload, "csv", strict=False)
     assert ok["error"] is None
     # the payload re-encodes to valid UTF-8, so no warning fires here; strict
     # semantics are exercised at the bytes level instead
-    from anytomd_spark.kernels.convert import convert_bytes
     from anytomd_spark.kernels.simple import MalformedDocument
     try:
         convert_bytes(b"Name,City\nAlice,Montr\xe9al\n", "csv", strict=True)

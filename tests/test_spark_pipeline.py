@@ -397,6 +397,69 @@ def test_job_rejects_partitions_flag(tmp_path):
     assert "unrecognized arguments: --partitions 8" in p.stderr
 
 
+_SESSION_PROBE = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from anytomd_spark.pipeline import build_session
+spark = build_session(
+    extra_conf={"spark.sql.parquet.compression.codec": "snappy"})
+print(json.dumps({k: spark.conf.get(k) for k in (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.parquet.compression.codec",
+    "spark.sql.execution.arrow.maxRecordsPerBatch",
+    "spark.driver.memory",
+)}))
+spark.stop()
+"""
+
+
+def _run_session_probe(tmp_path, launcher: list[str]) -> dict:
+    """``build_session`` in a fresh driver process started by
+    ``launcher``; returns the conf values it reads back."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "session_probe.py"
+    script.write_text(_SESSION_PROBE)
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+    p = subprocess.run(
+        [*launcher, str(script), repo], capture_output=True, text=True,
+        timeout=300, env=env,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    return json.loads(p.stdout.strip().splitlines()[-1])
+
+
+def test_build_session_submitted_conf_wins(tmp_path):
+    """Under spark-submit, a key given with --conf keeps its submitted
+    value instead of build_session's default; extra_conf still wins over
+    both, and defaults the submit left unset still apply."""
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin",
+                          "spark-submit")
+    got = _run_session_probe(tmp_path, [
+        submit, "--master", "local[1]",
+        "--conf", "spark.sql.shuffle.partitions=7",
+        "--conf", "spark.sql.parquet.compression.codec=gzip",
+    ])
+    assert got["spark.sql.shuffle.partitions"] == "7"
+    assert got["spark.sql.parquet.compression.codec"] == "snappy"
+    assert got["spark.sql.execution.arrow.maxRecordsPerBatch"] == "4096"
+
+
+def test_build_session_plain_python_defaults(tmp_path):
+    """Under plain python the builder launches the JVM itself, so every
+    default applies, the launch-time driver heap included."""
+    import sys
+
+    got = _run_session_probe(tmp_path, [sys.executable])
+    assert got["spark.sql.shuffle.partitions"] == "32"
+    assert got["spark.driver.memory"] == "16g"
+    assert got["spark.sql.parquet.compression.codec"] == "snappy"
+
+
 def test_salted_equals_unsalted_on_skewed_input(spark):
     """Mega-conversation skew: the salted repartition path must produce
     exactly the same converted rows as the shuffle-free path."""
